@@ -25,7 +25,8 @@ Reading = log replay:
    scanned ONCE with the snapshot schema (missing columns in old files
    surface as NULL — additive evolution just works); partition columns
    are injected as typed literals per the spec's serialization (they are
-   not stored in the data files);
+   not stored in the data files). ``_scan_entries`` is this scan, shared
+   by ``read_delta``, ``read_delta_where`` and the change feed;
 5. ``read_delta_where`` prunes the file list against the per-file
    ``stats`` min/max BEFORE any Spark scan — the import-side twin of
    ``tableformat.read_where``.
@@ -69,6 +70,7 @@ open-ecosystem surface in both directions.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -79,7 +81,9 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
+
+from .fileset import footer_stats, map_files, overlaps, part_lit
 
 _LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -404,8 +408,6 @@ def _id_requested_schema(spark, meta: dict, fields) -> "StructType":
     authoritative in this mode; footers must carry them). The enabling
     conf stays set — it is resolved at action time and only engages for
     requested schemas that carry field-id metadata."""
-    from pyspark.sql.types import StructField
-
     fid = _field_ids(meta)
     missing = [f.name for f in fields if f.name not in fid]
     if missing:
@@ -565,15 +567,12 @@ class _LiveSet:
         total, keep = 0, []
         for a in map(self._guard_dv, self._tail.values()):
             total += 1
-            stats = a.get("stats")
-            if stats:
-                s = json.loads(stats) if isinstance(stats, str) else stats
-                mins = s.get("minValues") or {}
-                maxs = s.get("maxValues") or {}
-                if column in mins and column in maxs:
-                    if maxs[column] < lo or mins[column] > hi:
-                        continue
-            keep.append(a["path"])
+            stats = a.get("stats") or {}
+            if isinstance(stats, str):
+                stats = json.loads(stats)
+            if overlaps((stats.get("minValues") or {}).get(column),
+                        (stats.get("maxValues") or {}).get(column), lo, hi):
+                keep.append(a["path"])
         ck = self._ckpt_surviving()
         if ck is not None:
             cast = ("double" if isinstance(lo, (int, float))
@@ -920,14 +919,6 @@ def _row_to_add(r) -> dict:
 # ------------------------------------------------------------------ reading
 
 
-def _partition_literal(value: str | None, dtype):
-    """Delta serializes partition values as strings (null for NULL); the
-    reader re-types them against the schema."""
-    if value is None:
-        return F.lit(None).cast(dtype)
-    return F.lit(value).cast(dtype)
-
-
 def commit_timestamps(path: str,
                       start_version: int | None = None,
                       end_version: int | None = None) -> dict[int, int]:
@@ -1068,36 +1059,36 @@ def _dv_pair_positions(table_path: str, pair: tuple) -> list[tuple]:
             for p in _dv_positions(table_path, json.loads(dvj))]
 
 
-def read_delta(
-    spark: SparkSession, path: str, version: int | None = None,
-    timestamp_ms: int | None = None,
-    _with_provenance: bool = False,
+def _scan_entries(
+    spark: SparkSession,
+    table_path: str,
+    meta: dict,
+    entries: list[tuple[str, dict, dict | None]],
+    extra_data_fields: list[StructField] = (),
+    with_provenance: bool = False,
 ) -> DataFrame:
-    """Snapshot read of a Delta table at ``version`` (default latest) or
-    AS OF ``timestamp_ms`` (the latest commit at or before it).
-    One scan per distinct partition tuple, schema from the log (NOT from
-    footers — old files missing later-added columns surface NULLs), and
-    partition columns injected as typed literals per the spec. Files
-    carrying DELETION VECTORS read whole and lose their deleted rows via
-    an anti-join on the scan's ``_metadata`` row provenance — vectors
-    decode on EXECUTORS (one task per DV file), so a table with millions
-    of deleted rows never materializes them on the driver."""
-    if timestamp_ms is not None:
-        if version is not None:
-            raise ValueError("give version OR timestamp_ms, not both")
-        version = version_at_or_before(path, timestamp_ms)
-    # canonicalize ONCE: the DV anti-join matches file paths against the
-    # scan's _metadata.file_path, which Hadoop qualifies to an absolute
-    # path — a relative/`..`-laden table path would silently match
-    # nothing and resurrect every deleted row
-    path = os.path.abspath(path)
-    snap = _snapshot_state(spark, path, version)
-    meta, live = snap.meta, snap.live
+    """The one scan of a Delta file list: ``entries`` = [(log path,
+    partitionValues, deletion vector or None)], read with the schema from
+    ``meta`` (NOT from footers — old files missing later-added columns
+    surface NULLs). One scan per distinct partition tuple, partition
+    columns injected as typed literals (they are not stored in the data
+    files). Under column mapping, data columns and partitionValues are
+    keyed by PHYSICAL names (mode=name) or resolved by field id
+    (mode=id), and the result surfaces logical names.
+    ``extra_data_fields`` widens the file schema (change-data files carry
+    ``_change_type`` in the data, always under its literal name).
+
+    Files carrying DELETION VECTORS read whole and lose their deleted
+    rows via an anti-join on the scan's ``_metadata`` row provenance —
+    vectors decode on EXECUTORS (one task per DV file), so a table with
+    millions of deleted rows never materializes them on the driver.
+    ``with_provenance`` keeps that provenance as ``__dv_src`` (file) and
+    ``__dv_idx`` (row index) columns, for writers that delete by
+    position."""
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    part_cols = meta.get("partitionColumns") or []
     phys = _physical_names(meta)  # {logical: physical} under mapping
     mode_id = _mapping_mode(meta) == "id"
-    part_cols = meta.get("partitionColumns") or []
-    from pyspark.sql.types import StructField
     data_fields = [f for f in schema.fields if f.name not in part_cols]
     if mode_id:
         data_schema = _id_requested_schema(spark, meta, data_fields)
@@ -1106,25 +1097,30 @@ def read_delta(
             StructField(phys[f.name] if phys else f.name, f.dataType, True)
             for f in data_fields
         ])
+    data_schema = StructType(data_schema.fields + list(extra_data_fields))
+    extra_names = [f.name for f in extra_data_fields]
+    out_names = [f.name for f in schema.fields] + extra_names
+
     by_part: dict[tuple, list[str]] = {}
     dv_by_abs: dict[str, dict] = {}
-    for entry in live.file_entries(allow_dv=True):
-        rel = urllib.parse.unquote(entry["path"])
-        absf = rel if os.path.isabs(rel) else os.path.join(path, rel)
-        pv = entry["partitionValues"]
-        # under column mapping partitionValues are keyed by physical names
+    for rel, pv, dv in entries:
+        dec = urllib.parse.unquote(rel)
+        absf = os.path.abspath(
+            dec if os.path.isabs(dec) else os.path.join(table_path, dec))
+        # under column mapping partitionValues are keyed by physical name
         key = tuple(
             pv.get(phys[c], pv.get(c)) if phys else pv.get(c)
             for c in part_cols
         )
         by_part.setdefault(key, []).append(absf)
-        if entry.get("deletionVector"):
-            dv_by_abs[absf] = entry["deletionVector"]
+        if dv:
+            dv_by_abs[absf] = dv
 
     if not by_part:
-        return spark.createDataFrame([], _strip_mapping_meta(schema))
+        return spark.createDataFrame([], StructType(
+            _strip_mapping_meta(schema).fields + list(extra_data_fields)))
 
-    with_dv = bool(dv_by_abs) or _with_provenance
+    with_meta = bool(dv_by_abs) or with_provenance
     meta_cols = [
         F.regexp_replace(
             F.col("_metadata.file_path"), r"^[A-Za-z0-9+.-]+:/+", "/"
@@ -1138,23 +1134,19 @@ def read_delta(
     )
     for key, files in sorted(by_part.items(), key=part_order):
         df = spark.read.schema(data_schema).parquet(*files)
-        if with_dv:
+        if with_meta:
             df = df.select("*", *meta_cols)
         for c, v in zip(part_cols, key):
-            df = df.withColumn(
-                c if mode_id else (phys[c] if phys else c),
-                _partition_literal(v, schema[c].dataType),
-            )
-        extra = ([F.col("__dv_src"), F.col("__dv_idx")]
-                 if with_dv else [])
-        if mode_id:
-            pieces.append(df.select(
-                *[F.col(f.name) for f in schema.fields], *extra))
+            df = df.withColumn(c if (mode_id or not phys) else phys[c],
+                               part_lit(v, schema[c].dataType))
+        if mode_id or not phys:
+            cols = [F.col(n) for n in out_names]
         else:
-            pieces.append(df.select(*(
-                [F.col(phys[f.name]).alias(f.name) if phys
-                 else F.col(f.name) for f in schema.fields] + extra
-            )))
+            cols = [F.col(n) if n in extra_names else F.col(phys[n]).alias(n)
+                    for n in out_names]
+        if with_meta:
+            cols += [F.col("__dv_src"), F.col("__dv_idx")]
+        pieces.append(df.select(*cols))
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)
@@ -1162,7 +1154,6 @@ def read_delta(
         pairs = sorted(
             (absf, json.dumps(dv)) for absf, dv in dv_by_abs.items()
         )
-        table_path = path
         rdd = (spark.sparkContext
                .parallelize(pairs, len(pairs))
                .flatMap(lambda t: _dv_pair_positions(table_path, t)))
@@ -1184,17 +1175,39 @@ def read_delta(
             & (F.col("__dv_idx") == F.col("__dvi")),
             "left_anti",
         )
-    if with_dv:
-        keep = [F.col(f.name) for f in schema.fields]
-        if _with_provenance:
+    if with_meta:
+        keep = [F.col(n) for n in out_names]
+        if with_provenance:
             keep += [F.col("__dv_src"), F.col("__dv_idx")]
         out = out.select(*keep)
     return out
 
 
-def _strip_mapping_meta(schema: StructType) -> StructType:
-    from pyspark.sql.types import StructField
+def read_delta(
+    spark: SparkSession, path: str, version: int | None = None,
+    timestamp_ms: int | None = None,
+    _with_provenance: bool = False,
+) -> DataFrame:
+    """Snapshot read of a Delta table at ``version`` (default latest) or
+    AS OF ``timestamp_ms`` (the latest commit at or before it): every
+    live file through ``_scan_entries``, deletion vectors applied."""
+    if timestamp_ms is not None:
+        if version is not None:
+            raise ValueError("give version OR timestamp_ms, not both")
+        version = version_at_or_before(path, timestamp_ms)
+    # canonicalize ONCE: the DV anti-join matches file paths against the
+    # scan's _metadata.file_path, which Hadoop qualifies to an absolute
+    # path — a relative/`..`-laden table path would silently match
+    # nothing and resurrect every deleted row
+    path = os.path.abspath(path)
+    snap = _snapshot_state(spark, path, version)
+    entries = [(e["path"], e["partitionValues"], e.get("deletionVector"))
+               for e in snap.live.file_entries(allow_dv=True)]
+    return _scan_entries(spark, path, snap.meta, entries,
+                         with_provenance=_with_provenance)
 
+
+def _strip_mapping_meta(schema: StructType) -> StructType:
     return StructType([
         StructField(f.name, f.dataType, f.nullable) for f in schema.fields
     ])
@@ -1233,33 +1246,18 @@ def read_delta_where(
 ) -> DataFrame:
     """Range read with manifest-side data skipping: only stats-matching
     files reach the scan; the exact predicate still applies on top."""
-    snap_state = _snapshot_state(spark, path, version)
-    meta = snap_state.meta
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    phys = _physical_names(meta)
-    if meta.get("partitionColumns") or snap_state.live.has_dv():
+    snap = _snapshot_state(spark, path, version)
+    meta = snap.meta
+    if meta.get("partitionColumns") or snap.live.has_dv():
         # partition columns aren't in footers, and deletion vectors need
         # the applying read; fall back to the full read (file pruning is
         # lost but correctness isn't — the exact predicate still applies)
         df = read_delta(spark, path, version)
         return df.filter(F.col(column).between(lo, hi))
-    files, _total = files_for_range(spark, path, column, lo, hi, version)
-    if not files:
-        return spark.createDataFrame([], _strip_mapping_meta(schema))
-    from pyspark.sql.types import StructField
-    if _mapping_mode(meta) == "id":
-        read_schema = _id_requested_schema(spark, meta, schema.fields)
-        df = spark.read.schema(read_schema).parquet(*files)
-        return df.filter(F.col(column).between(lo, hi))
-    read_schema = StructType([
-        StructField(phys[f.name] if phys else f.name, f.dataType, True)
-        for f in schema.fields
-    ])
-    df = spark.read.schema(read_schema).parquet(*files)
-    if phys:
-        df = df.select(*[
-            F.col(phys[f.name]).alias(f.name) for f in schema.fields
-        ])
+    phys = _physical_names(meta)
+    scol = phys.get(column, column) if phys else column  # stats keys: physical
+    kept, _total = snap.live.prune_range(scol, lo, hi)
+    df = _scan_entries(spark, path, meta, [(p, {}, None) for p in kept])
     return df.filter(F.col(column).between(lo, hi))
 
 
@@ -1802,14 +1800,6 @@ def upsert_delta(spark: SparkSession, df: DataFrame, path: str,
     return latest + 1
 
 
-def _num_records(absf: str) -> tuple[str, int]:
-    """(path, footer row count) — module-level so the add collector can
-    run it on EXECUTORS for wide Hive-partitioned writes."""
-    import pyarrow.parquet as pq
-
-    return absf, pq.ParquetFile(absf).metadata.num_rows
-
-
 def _collect_written_adds(
     out_dir: str, rel_dir: str, part_cols: list[str],
     spark: SparkSession | None = None,
@@ -1818,9 +1808,8 @@ def _collect_written_adds(
     data file, partitionValues parsed from the Hive-style key=value path
     components (Spark's escaping is Hive's percent-encoding; the spec's
     null marker maps back to None). Footer row counts (the stats field)
-    read on EXECUTORS above a few hundred files when ``spark`` is given —
-    a high-cardinality partitionBy write emits one file per tuple, and
-    the driver must not open them serially."""
+    and sizes come from ``footer_stats`` through ``map_files``, on
+    executors for a wide write when ``spark`` is given."""
     found: list[tuple[str, str, dict]] = []
     for root, _dirs, files in sorted(os.walk(out_dir)):
         rel_sub = os.path.relpath(root, out_dir)
@@ -1839,21 +1828,17 @@ def _collect_written_adds(
             rel = f"{rel_dir}/{name}" if rel_sub == "." else \
                 f"{rel_dir}/{rel_sub}/{name}"
             found.append((absf, rel, pv))
-    if spark is not None and len(found) > 256:
-        rdd = spark.sparkContext.parallelize(
-            [f for f, _r, _p in found], max(1, len(found) // 64))
-        counts = dict(rdd.map(_num_records).collect())
-    else:
-        counts = dict(_num_records(f) for f, _r, _p in found)
+    facts = map_files(functools.partial(footer_stats, cols=()),
+                      [f for f, _r, _p in found], spark)
     adds: list[dict] = []
-    for absf, rel, pv in found:
+    for (absf, rel, pv), (nrec, size, _) in zip(found, facts):
         adds.append({
             "path": urllib.parse.quote(rel, safe="/=%"),
             "partitionValues": pv,
-            "size": os.path.getsize(absf),
+            "size": size,
             "modificationTime": int(os.path.getmtime(absf) * 1000),
             "dataChange": True,
-            "stats": json.dumps({"numRecords": counts[absf]}),
+            "stats": json.dumps({"numRecords": nrec}),
         })
     return adds
 

@@ -49,6 +49,7 @@ import urllib.parse
 import uuid
 
 from .avro_ocf import write_ocf
+from .fileset import footer_stats
 from .tableformat import _commit_dir_of, _read_manifest, current_version
 
 _META_DIR = "metadata"
@@ -321,8 +322,6 @@ def export_iceberg(path: str, version: int | None = None) -> str:
     (default latest) beside the table's data files; returns the
     ``metadata.json`` path. Idempotent for the same snapshot; raises if a
     DIFFERENT snapshot was already exported there."""
-    import pyarrow.parquet as pq
-
     version = version if version is not None else current_version(path)
     if version is None:
         raise FileNotFoundError(f"no committed version at {path}")
@@ -374,7 +373,7 @@ def export_iceberg(path: str, version: int | None = None) -> str:
     entries, total_rows = [], 0
     for rel in rel_files:
         absf = os.path.join(path, rel)
-        nrec = pq.ParquetFile(absf).metadata.num_rows
+        nrec, fsize, _ = footer_stats(absf, ())
         total_rows += nrec
         lower, upper = [], []
         for col, (mn, mx) in (stats_map.get(rel) or {}).items():
@@ -398,7 +397,7 @@ def export_iceberg(path: str, version: int | None = None) -> str:
                 "file_format": "PARQUET",
                 "partition": {},
                 "record_count": nrec,
-                "file_size_in_bytes": os.path.getsize(absf),
+                "file_size_in_bytes": fsize,
                 "lower_bounds": lower or None,
                 "upper_bounds": upper or None,
             },

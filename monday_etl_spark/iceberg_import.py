@@ -31,8 +31,7 @@ Iceberg library required:
   from Iceberg single-value serialization and files are pruned BEFORE any
   Spark scan; manifest entries are decoded on EXECUTORS above a small
   threshold so a 100 TB table's million-entry manifests never
-  materialize on the driver (the r07 ``delta_import`` audit finding,
-  applied here at design time);
+  materialize on the driver;
 - **appends** commit a new snapshot under the HadoopCatalog protocol: new
   parquet files written by Spark, a new Avro manifest with per-file
   bounds, a manifest list carrying the prior snapshot's manifests, and
@@ -93,6 +92,7 @@ from pyspark.sql.types import (
 from . import tableformat as _tf
 from .avro_ocf import read_ocf
 from .iceberg_export import _MANIFEST_ENTRY, _bound_bytes
+from .fileset import footer_stats, map_files, overlaps, part_lit
 from .tableformat import ConcurrentCommitError
 
 _META_DIR = "metadata"
@@ -529,31 +529,20 @@ def _identity_sources(meta: dict) -> dict[int, str]:
 # ------------------------------------------------------------------ read
 
 
+def _stamps_field_ids(f: str) -> bool:
+    import pyarrow.parquet as pq
+
+    return all(
+        (fld.metadata or {}).get(b"PARQUET:field_id") is not None
+        for fld in pq.ParquetFile(f).schema_arrow
+    )
+
+
 def _footer_has_ids(files: list[str], spark: SparkSession) -> dict[str, bool]:
     """Whether each parquet footer stamps field ids (what iceberg-native
-    writers do). Probed distributed above a small file count so a huge
-    table's planning never serializes a million footer reads on the
-    driver."""
-
-    def probe(batch):
-        import pyarrow.parquet as pq
-
-        out = []
-        for f in batch:
-            sch = pq.ParquetFile(f).schema_arrow
-            has = all(
-                (fld.metadata or {}).get(b"PARQUET:field_id") is not None
-                for fld in sch
-            )
-            out.append((f, has))
-        return out
-
-    # a footer open is ~2-3 ms driver-side; the flat cost of one Python
-    # RDD job (~1 s) only amortizes past a few hundred files
-    if len(files) <= 256:
-        return dict(probe(files))
-    rdd = spark.sparkContext.parallelize(files, max(1, len(files) // 64))
-    return dict(rdd.mapPartitions(lambda it: probe(list(it))).collect())
+    writers do). Probed through ``map_files``, so a huge table's planning
+    never serializes a million footer reads on the driver."""
+    return dict(zip(files, map_files(_stamps_field_ids, files, spark)))
 
 
 _URI_RE = re.compile(r"^[A-Za-z0-9+.-]+:/+")
@@ -602,21 +591,6 @@ def _read_id_files(spark: SparkSession, files: list[str],
     return raw
 
 
-def _part_lit(value, dt: DataType):
-    """A manifest partition value as a typed Spark literal. Avro decodes
-    logical types to their physical carriers (date -> int days,
-    timestamp -> long micros)."""
-    if value is None:
-        return F.lit(None).cast(dt)
-    if isinstance(dt, DateType) and isinstance(value, int):
-        return F.date_from_unix_date(F.lit(value))
-    if isinstance(dt, (TimestampType, TimestampNTZType)) and isinstance(
-        value, int
-    ):
-        return F.timestamp_micros(F.lit(value)).cast(dt)
-    return F.lit(value).cast(dt)
-
-
 # identity-injected partition-tuple groups above which the read switches
 # from one-scan-per-tuple (constant injection; zero joins, best for a
 # handful of partitions) to ONE scan + a broadcast path-join injecting
@@ -626,7 +600,7 @@ _INJECT_JOIN_MIN_GROUPS = 33
 # Avro-physical carrier DDL for identity partition values riding through
 # the path-join injection frame (date -> int days, timestamp -> micros).
 # A source type outside this map (decimal, uuid, fixed, binary) keeps the
-# per-group constant-injection scan, whose _part_lit cast handles any
+# per-group constant-injection scan, whose part_lit cast handles any
 # primitive — slower plan growth, but never a crash on an exotic
 # external table.
 _INJECT_PHYS_DDL = {
@@ -674,7 +648,7 @@ def _read_mapped_files(spark: SparkSession, files_parts: list[tuple],
             )
             pname = id_part.get(f["id"])
             if pname is not None and pname in pvals:
-                base = F.coalesce(base, _part_lit(pvals[pname], dt))
+                base = F.coalesce(base, part_lit(pvals[pname], dt))
             exprs.append(base.alias(f["name"]))
         if with_meta:
             exprs = exprs + _meta_cols()
@@ -716,13 +690,13 @@ def _read_mapped_files_joined(
 
     # (normalized path, value per identity field) — values ride in their
     # Avro-physical carriers (date -> int days, timestamp -> micros) and
-    # convert to the logical type after the join, exactly like _part_lit.
+    # convert to the logical type after the join, exactly like part_lit.
     # The dispatcher only routes here when every inject type is in
     # _INJECT_PHYS_DDL; anything else stays on the per-group scan.
     phys_ddl = _INJECT_PHYS_DDL
     def phys_val(v, t: str):
         # manifests carry ints already; tolerate an exotic writer's
-        # stringly values the same way _part_lit's cast does
+        # stringly values the same way part_lit's cast does
         if v is None or not isinstance(v, str) or t == "string":
             return v
         if t == "date":
@@ -1013,9 +987,7 @@ def _entry_survives(t: tuple, key: str, ice_type: str | None,
         return True
     mn = _decode_bound(base64.b64decode(lows[key]), ice_type)
     mx = _decode_bound(base64.b64decode(ups[key]), ice_type)
-    if mn is None or mx is None:
-        return True
-    return not (mx < lo or mn > hi)
+    return overlaps(mn, mx, lo, hi)
 
 
 def _pruned_entries(spark: SparkSession, meta: dict, snap: dict,
@@ -1231,40 +1203,6 @@ def _write_data_files(typed: DataFrame, path: str, part_fields: list,
     return rel_files
 
 
-def _footer_file_stats(absf: str) -> tuple[str, int, int, dict]:
-    """One data file's manifest raw material: (path, rows, bytes,
-    {column: (min, max)}). Self-contained so the manifest builder can
-    run it on EXECUTORS — a transform-partitioned append can emit
-    thousands of files, and a driver-side sequential footer walk was
-    measured at ~12ms/file (2 minutes for a 9.6k-tuple day+bucket
-    append at sf0.1) before this moved out."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(absf)
-    nrec = pf.metadata.num_rows
-    stats: dict[str, tuple] = {}
-    for rg in range(pf.metadata.num_row_groups):
-        grp = pf.metadata.row_group(rg)
-        for ci in range(grp.num_columns):
-            col = grp.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = col.path_in_schema
-            mn, mx = st.min, st.max
-            if name in stats:
-                omn, omx = stats[name]
-                mn, mx = min(omn, mn), max(omx, mx)
-            stats[name] = (mn, mx)
-    return absf, nrec, os.path.getsize(absf), stats
-
-
-# footer opens are ~2-12 ms driver-side; one RDD job's flat ~1 s cost
-# only amortizes past a few hundred files (same constant as
-# _footer_has_ids)
-_FOOTER_STATS_DRIVER_MAX = 256
-
-
 def _data_manifest(path: str, rel_files: list[tuple], fields: list[dict],
                    part_fields: list, spec_fields: list[dict],
                    spec_id: int, schema: dict, seq: int,
@@ -1274,31 +1212,18 @@ def _data_manifest(path: str, rel_files: list[tuple], fields: list[dict],
     """Write one Avro manifest for freshly written files, with per-file
     footer bounds (pruning parity); identity partition values also
     publish as point bounds so readers data-skip on the partition column
-    without opening the (column-less) files. Footer stats extract on
-    EXECUTORS above a small file count (pass ``spark``) — a
+    without opening the (column-less) files. Footer facts come from
+    ``footer_stats`` through ``map_files`` (pass ``spark``) — a
     transform-routed append's file count scales with its partition-tuple
     count, and the driver must not pay it serially. Returns
     ``(manifest path, n entries, total rows)``."""
     from .avro_ocf import write_ocf
 
-    if spark is not None and len(rel_files) > _FOOTER_STATS_DRIVER_MAX:
-        paths = [absf for absf, _tv in rel_files]
-        rdd = spark.sparkContext.parallelize(
-            paths, max(1, len(paths) // 64))
-        by_path = {p: (n, sz, st) for p, n, sz, st in
-                   rdd.map(_footer_file_stats).collect()}
-    else:
-        by_path = {}
-        for absf, _tv in rel_files:
-            p, n, sz, st = _footer_file_stats(absf)
-            by_path[p] = (n, sz, st)
-
+    facts = map_files(footer_stats, [absf for absf, _tv in rel_files], spark)
     type_of = {f["name"]: f["type"] for f in fields}
     fid = {f["name"]: f["id"] for f in fields}
     entries, total_rows = [], 0
-    for absf, tuple_vals in rel_files:
-        nrec, fsize, stats = by_path[absf]
-        stats = dict(stats)
+    for (absf, tuple_vals), (nrec, fsize, stats) in zip(rel_files, facts):
         total_rows += nrec
         lower, upper = [], []
         for pf in part_fields:

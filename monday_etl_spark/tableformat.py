@@ -1,7 +1,7 @@
 """Manifest-versioned parquet tables: atomic commits, time travel, and
-file-reuse MERGE — the table-format layer TODO #1 asks Delta/Iceberg for,
-built from the two primitives those formats actually reduce to: immutable
-data files + a tiny versioned manifest naming which files are the table.
+file-reuse MERGE — the table-format layer of Delta/Iceberg, built from
+the two primitives those formats actually reduce to: immutable data
+files + a tiny versioned manifest naming which files are the table.
 
 Layout::
 
@@ -35,7 +35,7 @@ Layout::
   evolution surface NULLs for the added columns and each retained version
   time-travels with its own schema. ``rename_column``/``drop_column`` are
   METADATA-ONLY commits (zero data I/O at any table size). Resolution is
-  by FIELD ID (Iceberg's model, r07): every column is born with a
+  by FIELD ID (Iceberg's model): every column is born with a
   monotonic id, each file-writing commit records its directory's
   physical-name -> id epoch, and reads project id-by-id onto the current
   names — so renames are free, dropped ids stay dead, and a historical
@@ -82,6 +82,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fileset import footer_stats, overlaps
+
 _MANIFESTS = "_manifests"
 _DATA = "_data"
 _REFS = "_refs"
@@ -100,8 +102,8 @@ def _keys(key) -> list[str]:
 
 
 def _bucket_expr(key, n_buckets: int):
-    # must match temporal._bucket_expr for the single-key case: the layout
-    # hash is frozen on disk. Composite keys hash all columns together.
+    # the layout hash is frozen on disk (here and in temporal's bucketed
+    # snapshots). Composite keys hash all columns together.
     return F.pmod(
         F.xxhash64(*[F.col(k) for k in _keys(key)]), F.lit(n_buckets)
     ).cast("int")
@@ -487,76 +489,15 @@ def _bucket_files(commit_dir: str) -> dict[str, list[str]]:
     return out
 
 
-_STATS_MAX_LEN = 16  # string bounds truncate to this many code points
-
-
-def _truncate_bounds(mn: str, mx: str) -> list:
-    """Iceberg-style truncated string bounds: long stats values would make
-    the manifest grow with VALUE size (a 2 KB URL as a stats col = 4 KB per
-    file per column — at 100k files that is the difference between a KB-
-    scale manifest and a GB one), so bounds cap at ``_STATS_MAX_LEN`` code
-    points. The LOWER bound truncates down (a prefix sorts <= the full
-    string); the UPPER bound truncates and increments its last incrementable
-    code point, which sorts > every string sharing the prefix. When no code
-    point can be incremented (all at the Unicode max) the upper bound is
-    recorded as None = unbounded: pruning on that side is simply disabled
-    for the file — skipping is an optimization, never a correctness
-    filter."""
-    lo = mn if len(mn) <= _STATS_MAX_LEN else mn[:_STATS_MAX_LEN]
-    if len(mx) <= _STATS_MAX_LEN:
-        return [lo, mx]
-    prefix = mx[:_STATS_MAX_LEN]
-    for i in range(len(prefix) - 1, -1, -1):
-        cp = ord(prefix[i])
-        if cp >= 0x10FFFF:
-            continue
-        nxt = cp + 1
-        if 0xD800 <= nxt <= 0xDFFF:  # skip the surrogate gap
-            nxt = 0xE000
-        return [lo, prefix[:i] + chr(nxt)]
-    return [lo, None]
-
-
-def _footer_stats(root: str, rel_files: list[str],
-                  cols: list[str]) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for ``cols``, read from parquet FOOTERS only (no
-    data pages). A column is recorded only when every row group in the file
-    has stats for it and the values are JSON-safe (int/float/str) — absent
-    stats simply disable skipping for that file, never break reads. String
-    bounds are truncated (``_truncate_bounds``) so manifest size tracks
-    file count, never value length."""
-    import pyarrow.parquet as pq
-
+def _manifest_stats(root: str, rel_files: list[str],
+                    cols: list[str]) -> dict[str, dict[str, list]]:
+    """The manifest's ``stats`` map: per-file footer bounds for ``cols``
+    (``fileset.footer_stats``), omitting files with none."""
     out: dict[str, dict[str, list]] = {}
     for rel in rel_files:
-        md = pq.ParquetFile(os.path.join(root, rel)).metadata
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        per_col: dict[str, list] = {}
-        for col in cols:
-            if col not in names:
-                continue
-            mn = mx = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[col]).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo, hi = st.min, st.max
-                if isinstance(lo, bytes):
-                    lo, hi = lo.decode(), hi.decode()
-                if not isinstance(lo, (int, float, str)):
-                    ok = False
-                    break
-                mn = lo if mn is None else min(mn, lo)
-                mx = hi if mx is None else max(mx, hi)
-            if ok and mn is not None:
-                per_col[col] = (
-                    _truncate_bounds(mn, mx)
-                    if isinstance(mn, str) else [mn, mx]
-                )
-        if per_col:
-            out[rel] = per_col
+        bounds = footer_stats(os.path.join(root, rel), cols)[2]
+        if bounds:
+            out[rel] = bounds
     return out
 
 
@@ -575,7 +516,7 @@ def _carry_stats(path: str, man_old: dict, new_buckets: dict,
     all_files = [f for fs in new_buckets.values() for f in fs]
     keep = {f: old[f] for f in all_files if f in old}
     fresh = [f for f in all_files if f not in old]
-    keep.update(_footer_stats(path, fresh, cols))
+    keep.update(_manifest_stats(path, fresh, cols))
     return keep
 
 
@@ -680,7 +621,7 @@ def write_versioned(df: DataFrame, path: str, key,
     _stamp_txn(man, txn)
     _record_epoch(man, None, commit_dir)
     if stats_cols:
-        man["stats"] = _footer_stats(
+        man["stats"] = _manifest_stats(
             path, [f for fs in buckets.values() for f in fs], list(stats_cols)
         )
     _commit(path, man)
@@ -1122,21 +1063,11 @@ def _files_for_ranges_man(man: dict, preds: dict) -> tuple[list[str], int]:
     for fs in man["buckets"].values():
         for f in fs:
             st = stats.get(f, {})
-            drop = False
-            for col, (lo, hi) in preds.items():
-                rng = st.get(col)
-                # either bound may be None (= unbounded, e.g. an
-                # untruncatable string upper bound): that side never prunes
-                if rng is not None and (
-                    (rng[0] is not None and rng[0] > hi)
-                    or (rng[1] is not None and rng[1] < lo)
-                ):
-                    drop = True
-                    break
-            if drop:
-                pruned += 1
-            else:
+            if all(overlaps(*st.get(col, (None, None)), lo, hi)
+                   for col, (lo, hi) in preds.items()):
                 keep.append(f)
+            else:
+                pruned += 1
     return keep, pruned
 
 
@@ -1549,7 +1480,7 @@ def rebucket_versioned(spark: SparkSession, path: str,
     _carry_naming(newman, man)
     _record_epoch(newman, man, commit_dir)
     if spec.get("stats_cols"):
-        newman["stats"] = _footer_stats(
+        newman["stats"] = _manifest_stats(
             path, [f for fs in buckets.values() for f in fs],
             spec["stats_cols"],
         )
@@ -1812,7 +1743,7 @@ def optimize_zorder(spark: SparkSession, path: str, cols: list[str],
         "spec": spec,
         "schema": man.get("schema"),
         "buckets": buckets,
-        "stats": _footer_stats(
+        "stats": _manifest_stats(
             path, [f for fs in buckets.values() for f in fs],
             spec["stats_cols"],
         ),

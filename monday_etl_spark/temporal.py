@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .functions import money_sum
 from .io import write_historical, write_snapshot
+from .tableformat import _bucket_expr
 
 
 def dual_write(df: DataFrame, base_path: str, table: str) -> None:
@@ -134,13 +135,6 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
 
 _BUCKET_SPEC = "_bucket_spec.json"
 _BUCKET_COL = "__bucket"
-
-
-def _bucket_expr(key: str, n_buckets: int):
-    # xxhash64: stable across Spark versions and sessions (unlike F.hash's
-    # seed-sensitive Murmur3 usage elsewhere it's fine, but the layout hash
-    # must never change once data is on disk)
-    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
 
 
 def _read_bucket_spec(path: str) -> dict | None:

@@ -340,7 +340,7 @@ def test_delete_retries_after_lost_race(spark, tmp_path, monkeypatch):
 def test_truncate_bounds_semantics():
     """Truncated string bounds stay SOUND: lower <= every value, upper >
     every value with the truncated prefix (or None = unbounded)."""
-    from monday_etl_spark.tableformat import _STATS_MAX_LEN, _truncate_bounds
+    from monday_etl_spark.fileset import _STATS_MAX_LEN, _truncate_bounds
 
     # short values pass through untouched
     assert _truncate_bounds("abc", "xyz") == ["abc", "xyz"]
@@ -361,16 +361,30 @@ def test_truncate_bounds_semantics():
     assert hi is None
 
 
+def test_binary_stats_col_records_no_bound(spark, tmp_path):
+    """A binary stats column whose bytes are not UTF-8 commits: binary
+    min/max are not JSON-safe bounds, so none is recorded for it, and the
+    rows read back intact."""
+    df = spark.createDataFrame(
+        [(1, bytearray(b"\xff\xfe")), (2, bytearray(b"ok"))],
+        "id bigint, b binary")
+    path = str(tmp_path / "tbl")
+    assert write_versioned(df, path, key="id", n_buckets=2,
+                           stats_cols=["b"]) == 1
+    man = _read_manifest(path, 1)
+    assert all("b" not in st for st in man.get("stats", {}).values())
+    assert _rows(read_version(spark, path)) == [
+        (1, bytearray(b"\xff\xfe")), (2, bytearray(b"ok"))]
+
+
 def test_string_stats_truncated_and_skipping_sound(spark, tmp_path):
     """A long-string stats column: manifest bounds are capped at the
     truncation length (manifest size tracks FILE count, not value size),
     pruning still fires for disjoint ranges, and read_where stays exact."""
     import json as _json
 
-    from monday_etl_spark.tableformat import (
-        _STATS_MAX_LEN,
-        _manifest_path,
-    )
+    from monday_etl_spark.fileset import _STATS_MAX_LEN
+    from monday_etl_spark.tableformat import _manifest_path
 
     # values like "urlbucketXX/" + 80 chars of path: 8 distinct prefixes
     rows = [

@@ -585,6 +585,38 @@ def test_read_where_skips_files_by_bounds(spark, tmp_path):
     assert sorted(_norm_path(f) for f in got.inputFiles()) == keep
 
 
+def test_read_where_keeps_file_with_stats_less_row_group(spark, tmp_path):
+    """A row group holding an oversized value gets no min/max from the
+    parquet writer. The file's bounds must then be absent, not taken from
+    the other row groups, or the range read prunes the file that holds
+    the match."""
+    from monday_etl_spark.iceberg_import import (
+        create_iceberg_table,
+        read_iceberg_where,
+    )
+
+    path = str(tmp_path / "long")
+    create_iceberg_table(path, [("s", "string")])
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    prior = conf.get("parquet.block.size")
+    conf.set("parquet.block.size", "16384")
+    try:
+        vals = ([f"a{i:05d}" for i in range(3000)] + ["y" * 5000]
+                + [f"b{i:05d}" for i in range(3000)])
+        df = spark.createDataFrame([(v,) for v in vals], "s string")
+        append_iceberg(spark, df.coalesce(1), path)
+    finally:
+        if prior is None:
+            conf.unset("parquet.block.size")
+        else:
+            conf.set("parquet.block.size", prior)
+    hi = "z" * 6000
+    want = read_iceberg_table(spark, path).filter(
+        f"s between 'y' and '{hi}'").count()
+    assert want == 1
+    assert read_iceberg_where(spark, path, "s", "y", hi).count() == want
+
+
 def test_delete_where_and_compact_lifecycle(spark, tmp_path):
     """The full merge-on-read write lifecycle on our own commits:
     DELETE WHERE writes position-delete files (no data rewrite), reads
