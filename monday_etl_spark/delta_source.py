@@ -21,30 +21,15 @@ Spark-shaped despite the Python DataSource API:
   source exists for the *streaming* contract, where the per-batch file
   set is exactly what the log names.
 
-Offsets: ``{"version": v, "index": i}`` = the first ``i`` add-files of
-version ``v`` are processed and every version below ``v`` is complete.
-(Legacy ``{"version": v}`` checkpoints — written before rate limiting
-existed — mean "v fully processed" and normalize to ``(v+1, 0)``.) The
-``starting_version`` option (default: the table's current version, i.e.
-only NEW commits stream) rewinds to include history; ``0`` replays the
-table from its first commit — with our exporter that first commit IS the
-full initial snapshot, delta-spark's initial-snapshot batch.
-
-Rate limiting: ``max_files_per_batch`` caps how many add-files one
-micro-batch may contain (delta-spark's ``maxFilesPerTrigger``). The
-Python stream API's ``latestOffset()`` takes no start offset (and is
-called before the engine reveals ANY position, even ``initialOffset``),
-so the cap walks from self-tracked state seeded at the configured start.
-Two consequences, both safe: (1) after a checkpoint restart the first
-capped walk may lag the committed offset — the planned batch is clamped
-to empty against a delivered-high-water mark, the true position is folded
-in, and the next walk is right, so nothing is ever re-delivered; (2)
-``Trigger.AvailableNow`` plans exactly ONE batch for Python sources
-(Spark falls back to single-batch execution), so with a cap it becomes a
-*bounded resumable drain*: each ``.start()`` processes at most the cap
-and the checkpoint carries the position — re-run to completion. Replayed
-batches always use the engine's logged offsets, so the cap can never
-break exactly-once.
+Offsets: ``{"version": v, "index": i}``. ``fileset.FileStreamReader``
+owns the offset forms, the ``max_files_per_batch`` rate limit
+(delta-spark's ``maxFilesPerTrigger``) and the delivered-high-water
+clamp. The commit keys are the contiguous version range, so a version
+missing from the log refuses loudly. The ``starting_version`` option
+(default: the table's current version, i.e. only NEW commits stream)
+rewinds to include history; ``0`` replays the table from its first
+commit — with our exporter that first commit IS the full initial
+snapshot, delta-spark's initial-snapshot batch.
 
 Partitioned tables: partition columns are not in the data files (Hive
 layout, per the spec); each file's ``partitionValues`` strings ride the
@@ -53,7 +38,6 @@ InputPartition and surface as typed constant Arrow columns.
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import urllib.parse
@@ -61,11 +45,7 @@ import urllib.parse
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, InputPartition
 from pyspark.sql.types import StructType
 
 from .delta_import import (
@@ -76,13 +56,19 @@ from .delta_import import (
     _list_commits,
     _physical_names,
 )
+from .fileset import FileStreamReader, arrow_type, project
 
-_ARROW_TYPES = {
-    "bigint": pa.int64(), "int": pa.int32(), "smallint": pa.int16(),
-    "tinyint": pa.int8(), "double": pa.float64(), "float": pa.float32(),
-    "string": pa.string(), "boolean": pa.bool_(), "date": pa.date32(),
-    "binary": pa.binary(),
-}
+
+def _checkpoint_action(parts: list[str], kind: str) -> dict | None:
+    """The first non-null ``kind`` row across the parts of one
+    (possibly multi-part) checkpoint, read with pyarrow."""
+    for f in parts:
+        if kind not in pq.ParquetFile(f).schema_arrow.names:
+            continue
+        for m in pq.read_table(f, columns=[kind]).column(kind).to_pylist():
+            if m is not None:
+                return m
+    return None
 
 
 def _local_action(path: str, kind: str) -> dict | None:
@@ -98,13 +84,9 @@ def _local_action(path: str, kind: str) -> dict | None:
                         return a[kind]
     ckpts = _list_checkpoints(path)
     for v in sorted(ckpts, reverse=True):
-        for f in ckpts[v]:  # all parts of a multi-part checkpoint
-            if kind not in pq.ParquetFile(f).schema_arrow.names:
-                continue
-            col = pq.read_table(f, columns=[kind]).column(kind)
-            for m in col.to_pylist():
-                if m is not None:
-                    return m
+        m = _checkpoint_action(ckpts[v], kind)
+        if m is not None:
+            return m
     return None
 
 
@@ -139,17 +121,7 @@ def _check_cdf_enabled_local(path: str, start_v: int, end_v: int) -> None:
         replay_from = 0
     elif seed_cands:
         c = max(seed_cands)
-        meta = None
-        for f in ckpts[c]:  # all parts of a multi-part checkpoint
-            if "metaData" not in pq.ParquetFile(f).schema_arrow.names:
-                continue
-            col = pq.read_table(f, columns=["metaData"]).column("metaData")
-            for m in col.to_pylist():
-                if m is not None:
-                    meta = m
-                    break
-            if meta is not None:
-                break
+        meta = _checkpoint_action(ckpts[c], "metaData")
         if meta is None:
             # a checkpoint without a readable metaData row proves
             # nothing: stay UNKNOWN, never "proven off"
@@ -297,27 +269,6 @@ _CDF_META_FIELDS = [
 ]
 
 
-def _part_cell(value: str | None, simple: str, col: str):
-    """Delta serializes partition values as canonical strings (absent/null
-    for NULL); re-type one for an arrow constant column."""
-    if value is None:
-        return None
-    if simple in ("bigint", "int", "smallint", "tinyint"):
-        return int(value)
-    if simple in ("double", "float"):
-        return float(value)
-    if simple == "boolean":
-        return value == "true"
-    if simple == "string":
-        return value
-    if simple == "date":
-        return datetime.date.fromisoformat(value)
-    raise DeltaProtocolError(
-        f"partition column {col}: type {simple} not supported by the "
-        "arrow stream reader"
-    )
-
-
 class DeltaFilePartition(InputPartition):
     def __init__(self, abs_path: str, part_values: dict | None = None,
                  change_type: str | None = None,
@@ -333,18 +284,19 @@ class DeltaFilePartition(InputPartition):
         self.commit_ts_ms = commit_ts_ms
 
 
-class DeltaStreamReader(DataSourceStreamReader):
+class DeltaStreamReader(FileStreamReader):
+    key = "version"
+    error = DeltaProtocolError
+    partition_type = DeltaFilePartition
+
     def __init__(self, options):
+        super().__init__(options)
         self.path = options.get("path")
         if not self.path:
             raise ValueError("delta_stream source requires the 'path' option")
         self.ignore_deletes = (
             str(options.get("ignore_deletes", "false")).lower() == "true"
         )
-        mf = options.get("max_files_per_batch")
-        self.max_files = int(mf) if mf is not None else None
-        if self.max_files is not None and self.max_files < 1:
-            raise ValueError("max_files_per_batch must be >= 1")
         meta = _local_meta(self.path)
         # the same protocol/metaData gates the batch reader enforces: a
         # minReaderVersion this bridge doesn't implement, mode=id mapping,
@@ -366,6 +318,14 @@ class DeltaStreamReader(DataSourceStreamReader):
         self.phys = _physical_names(meta) or {}
         self.part_cols = meta.get("partitionColumns") or []
         self.schema = StructType.fromJson(json.loads(meta["schemaString"]))
+        self.arrow = []
+        for f in self.schema.fields:
+            at = arrow_type(f.dataType)
+            if at is None:
+                raise DeltaProtocolError(
+                    f"column {f.name}: type {f.dataType.simpleString()} "
+                    "not supported by the arrow stream reader")
+            self.arrow.append((f.name, at))
         self.cdf = (str(options.get("read_change_feed", "false")).lower()
                     == "true")
         if self.cdf:
@@ -399,171 +359,52 @@ class DeltaStreamReader(DataSourceStreamReader):
             self._initial = {"version": int(start), "index": 0}
         else:
             # only NEW commits stream: the current head, fully consumed
-            self._initial = self._head_offset()
-        # Two self-tracked watermarks (the Python API's latestOffset()
-        # has no start argument, so the reader must keep position state):
-        # _pos = advisory max position ever seen (feeds the rate-limit
-        # walk), _hw = max end handed out by partitions() this lifetime
-        # (clamps re-delivery: a capped latestOffset computed before a
-        # checkpoint restart revealed the true committed offset may lag
-        # it, and the engine would otherwise replay already-delivered
-        # files; see latestOffset/partitions)
-        self._pos: tuple[int, int] | None = None
-        self._hw: tuple[int, int] | None = None
+            self._initial = self._head()
 
-    # -------------------------------------------------------- offsets
+    def _keys(self) -> range:
+        return range(_current_version(self.path) + 1)
 
-    @staticmethod
-    def _norm(off: dict) -> tuple[int, int]:
-        v = off["version"]
-        if "index" in off:
-            return (v, off["index"])
-        return (v + 1, 0)  # index-free form: v fully processed
-
-    def _head_offset(self) -> dict:
-        """The table head, fully consumed — the index-free form, so no
-        commit parse is needed. Batches ending here traverse the head
-        version completely, which is what makes a remove-only head commit
-        refuse loudly at plan time instead of silently stalling the
-        stream one index short of it."""
-        return {"version": _current_version(self.path)}
-
-    def _version_units(self, v: int) -> list:
-        """The version's micro-batch units — change-feed units when
-        streaming the feed, plain add actions otherwise. Offsets index
-        into THIS list on both the rate-limit walk and planning."""
+    def _commit_units(self, v: int) -> tuple[list, object]:
+        """Change-feed units and the commit timestamp when streaming the
+        feed; add actions and whether the version removes files
+        otherwise."""
         if self.cdf:
-            units, _ts = _cdf_version_units(self.path, v)
-            return units
-        adds, _ = _version_actions(self.path, v)
-        return adds
+            return _cdf_version_units(self.path, v)
+        return _version_actions(self.path, v)
 
-    def _advance(self, pos: tuple[int, int], head_v: int,
-                 budget: int) -> tuple[int, int]:
-        """Walk at most ``budget`` add-files forward from ``pos``, never
-        past the end of version ``head_v``."""
-        v, i = pos
-        while budget > 0 and v <= head_v:
-            adds = self._version_units(v)
-            if i >= len(adds):
-                if v >= head_v:
-                    break
-                v, i = v + 1, 0
-                continue
-            take = min(len(adds) - i, budget)
-            i += take
-            budget -= take
-        return (v, i)
+    def _partitions_of(self, v: int, window: list, units: list, fact,
+                       batch: dict) -> list:
+        def abs_of(rel: str) -> str:
+            rel = urllib.parse.unquote(rel)
+            return rel if os.path.isabs(rel) else os.path.join(self.path, rel)
 
-    def _trace(self, msg: str) -> None:
-        t = os.environ.get("SPARK_GRAFT_DS_TRACE")
-        if t:
-            with open(t, "a") as fh:
-                fh.write(f"pid={os.getpid()} {msg}\n")
-
-    def initialOffset(self) -> dict:
-        self._trace(f"initialOffset pos={self._pos}")
-        i = self._norm(self._initial)
-        self._pos = max(self._pos or i, i)
-        return self._initial
-
-    def latestOffset(self) -> dict:
-        self._trace(f"latestOffset pos={self._pos}")
-        head = self._head_offset()
-        if self.max_files is None:
-            end = self._norm(head)
-            self._pos = max(self._pos or end, end)
-            return head
-        # the engine calls latestOffset before revealing any position
-        # (even before initialOffset on a fresh stream), so the first
-        # walk starts from the configured start. After a checkpoint
-        # restart this may lag the committed offset — partitions() then
-        # plans an empty batch and folds the true position into _pos/_hw,
-        # so the next walk is right and nothing is re-delivered.
-        base = self._pos if self._pos is not None else self._norm(self._initial)
-        end = self._advance(base, _current_version(self.path),
-                            self.max_files)
-        self._pos = max(base, end)
-        if end == self._norm(head):
-            # caught up: return head's own dict so an idle stream keeps
-            # comparing equal under the engine's offset-equality check
-            return head
-        return {"version": end[0], "index": end[1]}
-
-    # ------------------------------------------------------- planning
-
-    def partitions(self, start: dict, end: dict):
-        self._trace(f"partitions {start} {end} pos={self._pos} hw={self._hw}")
-        s, e = self._norm(start), self._norm(end)
-        # clamp below the delivered high-water: after a restart, a capped
-        # latestOffset computed before the engine revealed its committed
-        # offset can lag it; the engine then plans (committed, lagging) —
-        # deliver nothing already handed out, and fold the true position
-        # so the next capped walk starts from it
-        lo = max(s, self._hw) if self._hw is not None else s
-        self._hw = max(self._hw or e, s, e)
-        self._pos = max(self._pos or e, s, e)
-        parts: list[DeltaFilePartition] = []
-        for v in range(lo[0], e[0] + 1) if e > lo else ():
-            if v == e[0] and e[1] == 0:
-                break  # nothing taken from the end version
-            if self.cdf:
-                units, ts = _cdf_version_units(self.path, v)
-                plo = lo[1] if v == lo[0] else 0
-                phi = e[1] if v == e[0] else len(units)
-                for rel, pv, ct in units[plo:phi]:
-                    rel = urllib.parse.unquote(rel)
-                    absf = (rel if os.path.isabs(rel)
-                            else os.path.join(self.path, rel))
-                    parts.append(DeltaFilePartition(
-                        absf, pv, change_type=ct,
-                        commit_version=v, commit_ts_ms=ts))
-                continue
-            adds, has_remove = _version_actions(self.path, v)
-            # any traversed version with a remove refuses — even one whose
-            # adds-slice is empty (a pure delete commit), since the delete
-            # itself cannot be represented in an append stream
-            if has_remove and not self.ignore_deletes:
-                raise DeltaProtocolError(
-                    f"{self.path}: version {v} removes files: a delete/"
-                    "compaction cannot replay as an append stream (set "
-                    "ignore_deletes to skip removes)"
-                )
-            plo = lo[1] if v == lo[0] else 0
-            phi = e[1] if v == e[0] else len(adds)
-            for a in adds[plo:phi]:
-                rel = urllib.parse.unquote(a["path"])
-                absf = (rel if os.path.isabs(rel)
-                        else os.path.join(self.path, rel))
-                parts.append(
-                    DeltaFilePartition(absf, a.get("partitionValues") or {})
-                )
-        # an empty batch still needs ≥1 partition for the API contract
-        return parts or [DeltaFilePartition("")]
+        if self.cdf:
+            return [DeltaFilePartition(abs_of(rel), pv, change_type=ct,
+                                       commit_version=v, commit_ts_ms=fact)
+                    for rel, pv, ct in window]
+        # any traversed version with a remove refuses — even one whose
+        # adds-slice is empty (a pure delete commit), since the delete
+        # itself cannot be represented in an append stream
+        if fact and not self.ignore_deletes:
+            raise DeltaProtocolError(
+                f"{self.path}: version {v} removes files: a delete/"
+                "compaction cannot replay as an append stream (set "
+                "ignore_deletes to skip removes)"
+            )
+        return [DeltaFilePartition(abs_of(a["path"]),
+                                   a.get("partitionValues") or {})
+                for a in window]
 
     # -------------------------------------------------------- reading
 
     def read(self, partition: DeltaFilePartition):
         if not partition.abs_path:
             return iter([])
-        want = [(f.name, _ARROW_TYPES.get(f.dataType.simpleString()))
-                for f in self.schema.fields]
-        for name, at in want:
-            if at is None:
-                raise DeltaProtocolError(
-                    f"column {name}: type "
-                    f"{self.schema[name].dataType.simpleString()} not "
-                    "supported by the arrow stream reader"
-                )
         pv = partition.part_values
-        part_cells = {
-            c: _part_cell(
-                # under column mapping partitionValues use physical names
-                pv.get(self.phys.get(c, c), pv.get(c)),
-                self.schema[c].dataType.simpleString(), c,
-            )
-            for c in self.part_cols
-        }
+        # Hive layout: a partition column's value lives in partitionValues
+        # (keyed by physical name under column mapping), not the file
+        consts = {c: pv.get(self.phys.get(c, c), pv.get(c))
+                  for c in self.part_cols}
 
         def batches():
             pf = pq.ParquetFile(partition.abs_path)
@@ -574,53 +415,34 @@ class DeltaStreamReader(DataSourceStreamReader):
                     fid = (fld.metadata or {}).get(b"PARQUET:field_id")
                     if fid is not None:
                         by_id[int(fid)] = fld.name
+            plan = []
+            for name, at in self.arrow:
+                footer = self.phys.get(name, name)
+                if self.mode_id:
+                    footer = by_id.get(self.field_ids[name], footer)
+                # a column a pre-evolution file lacks surfaces as NULLs,
+                # same contract as read_delta
+                src = (footer if name not in consts and footer in present
+                       else None)
+                plan.append((name, src, at, consts.get(name)))
+            if self.cdf:
+                # change-feed stamps: the change type travels in cdc
+                # files (change_type None) and is a constant for
+                # plain-add inserts; version/timestamp are commit
+                # constants
+                plan += [
+                    ("_change_type", "_change_type"
+                     if partition.change_type is None else None,
+                     pa.string(), partition.change_type),
+                    ("_commit_version", None, pa.int64(),
+                     partition.commit_version),
+                    ("_commit_timestamp", None, pa.timestamp("us", tz="UTC"),
+                     partition.commit_ts_ms * 1000),
+                ]
             for rb in pf.iter_batches():
-                n = rb.num_rows
-                cols = []
-                for name, at in want:
-                    footer = self.phys.get(name, name)
-                    if self.mode_id:
-                        footer = by_id.get(self.field_ids[name], footer)
-                    if name in self.part_cols:
-                        # Hive layout: the value lives in partitionValues,
-                        # not the file — surface it as a typed constant
-                        cell = part_cells[name]
-                        cols.append(pa.nulls(n, type=at) if cell is None
-                                    else pa.array([cell] * n, type=at))
-                    elif footer in present:
-                        cols.append(
-                            rb.column(rb.schema.get_field_index(footer))
-                            .cast(at))
-                    else:
-                        # pre-evolution file: the column surfaces as NULLs,
-                        # same contract as read_delta
-                        cols.append(pa.nulls(n, type=at))
-                names = [w[0] for w in want]
-                if self.cdf:
-                    # change-feed stamps: the change type travels in cdc
-                    # files (change_type None) and is a constant for
-                    # plain-add inserts; version/timestamp are commit
-                    # constants
-                    if partition.change_type is None:
-                        idx = rb.schema.get_field_index("_change_type")
-                        cols.append(rb.column(idx).cast(pa.string()))
-                    else:
-                        cols.append(pa.array(
-                            [partition.change_type] * n, pa.string()))
-                    cols.append(pa.array(
-                        [partition.commit_version] * n, pa.int64()))
-                    cols.append(pa.array(
-                        [partition.commit_ts_ms * 1000] * n,
-                        pa.timestamp("us", tz="UTC")))
-                    names = names + [f for f, _t in _CDF_META_FIELDS]
-                yield pa.RecordBatch.from_arrays(cols, names=names)
+                yield project(rb, plan)
 
         return batches()
-
-    def commit(self, end: dict) -> None:
-        self._trace(f"commit {end} pos={self._pos}")
-        e = self._norm(end)
-        self._pos = max(self._pos or e, e)
 
 
 class DeltaStreamDataSource(DataSource):
@@ -669,27 +491,20 @@ def stream_delta(spark: SparkSession, path: str,
     ``delta_cdf.read_delta_changes`` for historical reconstruction)."""
     from .session import ensure_session_confs
 
-    if starting_version is not None and starting_timestamp is not None:
-        raise ValueError(
-            "give starting_version OR starting_timestamp, not both"
-        )
-    # the reader re-checks in its own process, but errors raised inside a
-    # Python DataSource reader's __init__ only surface at stream START —
-    # validate here so an unreadable table fails at declaration time
-    _check_protocol(_local_action(path, "protocol"))
-    _check_meta(_local_meta(path))
+    opts = {"path": path}
+    for k, v in (("starting_version", starting_version),
+                 ("starting_timestamp", starting_timestamp),
+                 ("max_files_per_batch", max_files_per_batch)):
+        if v is not None:
+            opts[k] = str(v)
+    if ignore_deletes:
+        opts["ignore_deletes"] = "true"
+    if read_change_feed:
+        opts["read_change_feed"] = "true"
+    # errors a Python DataSource reader raises in __init__ only surface
+    # at stream START: build it once here so a bad table or option fails
+    # at declaration time
+    DeltaStreamReader(opts)
     ensure_session_confs(spark)
     spark.dataSource.register(DeltaStreamDataSource)
-    reader = spark.readStream.format("delta_stream").option("path", path)
-    if starting_version is not None:
-        reader = reader.option("starting_version", str(starting_version))
-    if starting_timestamp is not None:
-        reader = reader.option("starting_timestamp", str(starting_timestamp))
-    if ignore_deletes:
-        reader = reader.option("ignore_deletes", "true")
-    if max_files_per_batch is not None:
-        reader = reader.option("max_files_per_batch",
-                               str(max_files_per_batch))
-    if read_change_feed:
-        reader = reader.option("read_change_feed", "true")
-    return reader.load()
+    return spark.readStream.format("delta_stream").options(**opts).load()

@@ -184,6 +184,59 @@ def test_partitioned_table_streams_typed_partition_columns(spark, tmp_path):
     ]
 
 
+def test_timestamp_partition_streams_like_batch_read(spark, tmp_path):
+    """Timestamp partition values in both of the spec's spellings (zone-
+    less, read in the UTC session zone, and ISO-8601 with ``Z``) and a
+    timestamp data column stream exactly as ``read_delta`` reads them."""
+    table = str(tmp_path / "ts_part")
+    os.makedirs(os.path.join(table, "data"))
+    schema = json.dumps({"type": "struct", "fields": [
+        {"name": "id", "type": "long", "nullable": True, "metadata": {}},
+        {"name": "at", "type": "timestamp", "nullable": True,
+         "metadata": {}},
+        {"name": "hour", "type": "timestamp", "nullable": True,
+         "metadata": {}},
+    ]})
+    actions = [
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {"metaData": {"id": "x", "format": {"provider": "parquet",
+                                            "options": {}},
+                      "schemaString": schema,
+                      "partitionColumns": ["hour"], "configuration": {}}},
+    ]
+    for i, hour in enumerate(["2026-01-05 12:00:00",
+                              "2026-01-06T01:00:00.000004Z"]):
+        stage = os.path.join(table, f"_stage{i}")
+        spark.createDataFrame(
+            [(i, datetime.datetime(2026, 1, 5 + i, 3, 4, 5))],
+            "id bigint, at timestamp").coalesce(1).write.parquet(stage)
+        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+        os.replace(os.path.join(stage, part),
+                   os.path.join(table, "data", f"d{i}.parquet"))
+        actions.append({"add": {"path": f"data/d{i}.parquet",
+                                "partitionValues": {"hour": hour},
+                                "size": 1, "modificationTime": 0,
+                                "dataChange": True}})
+    log = os.path.join(table, "_delta_log")
+    os.makedirs(log)
+    with open(os.path.join(log, f"{0:020d}.json"), "w") as fh:
+        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+
+    got: list = []
+
+    def handle(batch, _bid):
+        got.extend(tuple(r) for r in batch.collect())
+
+    q = (stream_delta(spark, table, starting_version=0)
+         .writeStream.foreachBatch(handle)
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    want = sorted(tuple(r) for r in read_delta(spark, table).collect())
+    assert len(want) == 2 and None not in want[0] + want[1]
+    assert sorted(got) == want
+
+
 def _mk_multifile_table(spark, root):
     """v0 = 3 files (10 rows), v1 and v2 = 2 files (4 rows) each."""
     path = str(root / "tbl")
@@ -252,19 +305,47 @@ def test_available_now_with_cap_is_a_bounded_resumable_drain(spark, tmp_path):
 
 def test_offset_forms_normalize():
     from monday_etl_spark.delta_source import DeltaStreamReader
+    from monday_etl_spark.iceberg_source import IcebergStreamReader
 
     assert DeltaStreamReader._norm({"version": 3}) == (4, 0)
     assert DeltaStreamReader._norm({"version": 3, "index": 2}) == (3, 2)
+    assert IcebergStreamReader._norm({"seq": 3}) == (4, 0)
+    assert IcebergStreamReader._norm({"seq": 3, "index": 2}) == (3, 2)
+
+
+def _check_walk(reader, keys, sizes, cap):
+    """Walk ``reader`` from the first key in ``cap``-unit steps: it never
+    exceeds the budget, never regresses, never passes head, and the
+    capped steps visit exactly the uncapped unit sequence."""
+    head = (keys[-1], sizes[-1])
+    pos, seen = (keys[0], 0), []
+    for _ in range(sum(sizes) + len(sizes) + 2):
+        nxt = reader._advance(pos, keys, cap)
+        assert nxt >= pos, "walk regressed"
+        assert nxt <= head, "walk passed head"
+        taken = [(k, i) for k, n in zip(keys, sizes)
+                 if pos[0] <= k <= nxt[0]
+                 for i in range(pos[1] if k == pos[0] else 0,
+                                nxt[1] if k == nxt[0] else n)]
+        assert len(taken) <= cap, "budget exceeded"
+        seen += taken
+        if nxt == pos:
+            break
+        pos = nxt
+    assert pos == head, "walk did not reach head"
+    want = [(k, i) for k, n in zip(keys, sizes) for i in range(n)]
+    assert seen == want, "capped walk skipped or duplicated files"
 
 
 def test_advance_walk_properties(tmp_path):
-    """Property-check the rate-limit walk against a synthetic log: it
-    never exceeds the budget, never regresses, never passes head, and
-    walking in capped steps visits exactly the uncapped file sequence."""
+    """Property-check the rate-limit walk against a synthetic Delta log
+    (contiguous versions) and against sparse commit keys with empty
+    commits anywhere (Iceberg sequence numbers)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from monday_etl_spark.delta_source import DeltaStreamReader
+    from monday_etl_spark.fileset import FileStreamReader
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -293,24 +374,41 @@ def test_advance_walk_properties(tmp_path):
 
         r = DeltaStreamReader({"path": str(table), "starting_version": "0",
                                "max_files_per_batch": str(cap)})
-        head_v = len(sizes) - 1
-        pos, seen = (0, 0), []
-        for _ in range(sum(sizes) + len(sizes) + 2):
-            nxt = r._advance(pos, head_v, cap)
-            assert nxt >= pos, "walk regressed"
-            taken = [(v, i) for v in range(pos[0], nxt[0] + 1)
-                     for i in range(pos[1] if v == pos[0] else 0,
-                                    nxt[1] if v == nxt[0] else sizes[v])]
-            assert len(taken) <= cap, "budget exceeded"
-            seen += taken
-            if nxt == pos:
-                break
-            pos = nxt
-        assert pos == (head_v, sizes[head_v]), "walk did not reach head"
-        want = [(v, i) for v, n in enumerate(sizes) for i in range(n)]
-        assert seen == want, "capped walk skipped or duplicated files"
+        keys = r._keys()
+        assert list(keys) == list(range(len(sizes)))
+        _check_walk(r, keys, sizes, cap)
 
     check()
+
+    class Sparse(FileStreamReader):
+        key = "seq"
+
+        def __init__(self, sizes_of):
+            super().__init__({})
+            self.sizes_of = sizes_of
+
+        def _keys(self):
+            return sorted(self.sizes_of)
+
+        def _commit_units(self, k):
+            return list(range(self.sizes_of[k])), None
+
+        def read(self, partition):
+            return iter([])
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        commits=st.dictionaries(st.integers(min_value=1, max_value=40),
+                                st.integers(min_value=0, max_value=5),
+                                min_size=1, max_size=8),
+        cap=st.integers(min_value=1, max_value=7),
+    )
+    def check_sparse(commits, cap):
+        r = Sparse(commits)
+        keys = r._keys()
+        _check_walk(r, keys, [commits[k] for k in keys], cap)
+
+    check_sparse()
 
 
 def test_starting_timestamp_resolves_to_first_commit_at_or_after(

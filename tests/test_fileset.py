@@ -12,6 +12,7 @@ from monday_etl_spark.fileset import (
     footer_stats,
     map_files,
     overlaps,
+    project,
 )
 
 
@@ -39,3 +40,30 @@ def test_overlaps_none_is_unbounded():
     assert overlaps(None, 5, -100, -50) and not overlaps(None, 5, 6, 9)
     assert overlaps(1, None, 50, 60) and not overlaps(1, None, -9, 0)
     assert overlaps(1, 5, None, 0) is False and overlaps(1, 5, 3, None)
+
+
+def test_project_footer_then_constant_then_nulls():
+    """Each field is its footer column cast to the field type, else the
+    typed constant (int days / micros are Avro carriers, strings parse
+    by cast), else NULLs."""
+    import datetime
+
+    rb = pa.record_batch([pa.array([1, 2], pa.int32())], names=["i"])
+    utc = pa.timestamp("us", tz="UTC")
+    out = project(rb, [
+        ("id", "i", pa.int64(), 99),
+        ("d", None, pa.date32(), 19727),
+        ("ds", None, pa.date32(), "2024-01-05"),
+        ("t", None, utc, 1_700_000_000_000_000),
+        ("ts", None, utc, "2023-11-14 22:13:20"),
+        ("b", None, pa.bool_(), "true"),
+        ("gone", None, pa.float64(), None),
+    ])
+    assert out.schema.names == ["id", "d", "ds", "t", "ts", "b", "gone"]
+    assert out.column(0).type == pa.int64()
+    day = datetime.date(2024, 1, 5)
+    at = datetime.datetime(2023, 11, 14, 22, 13, 20,
+                           tzinfo=datetime.timezone.utc)
+    assert out.to_pylist() == [
+        {"id": i, "d": day, "ds": day, "t": at, "ts": at, "b": True,
+         "gone": None} for i in (1, 2)]

@@ -368,3 +368,45 @@ def test_stream_skips_merged_manifest_carryover(spark, tmp_path):
     got = sorted((r.id, r.v) for r in spark.read.parquet(out).collect())
     # each row exactly once: f1 via snapshot 100, f2 via snapshot 200
     assert got == [(1, 10), (2, 20), (5, 50)]
+
+
+def test_date_identity_partition_streams_typed(spark, tmp_path):
+    """Avro carries a date identity-partition value as int days; the
+    streamed constant column must come out as that date — in the plain
+    stream (against read_iceberg_table) and in the changelog stream
+    (against read_iceberg_changes)."""
+    import datetime
+
+    from monday_etl_spark.iceberg_changes import read_iceberg_changes
+    from monday_etl_spark.iceberg_import import (
+        create_iceberg_table,
+        iceberg_history,
+    )
+
+    path = str(tmp_path / "by_date")
+    create_iceberg_table(path, [("id", "long"), ("d", "date")],
+                         partition_by=[("d", "identity")])
+    append_iceberg(spark, spark.createDataFrame(
+        [(1, datetime.date(2024, 1, 5)), (2, datetime.date(2024, 2, 6))],
+        "id long, d date"), path)
+    first = iceberg_history(path)[0]["snapshot_id"]
+
+    def drained(ckpt, **opts):
+        rows: list = []
+
+        def handle(batch, _bid):
+            rows.extend(tuple(r) for r in batch.collect())
+
+        q = (stream_iceberg(spark, path, starting_snapshot_id=first, **opts)
+             .writeStream.foreachBatch(handle)
+             .option("checkpointLocation", str(tmp_path / ckpt))
+             .trigger(availableNow=True).start())
+        q.awaitTermination()
+        return sorted(rows)
+
+    want = sorted(tuple(r) for r in read_iceberg_table(spark, path).collect())
+    assert len(want) == 2
+    assert drained("plain") == want
+    changes = read_iceberg_changes(spark, path)
+    assert drained("changes", changelog=True) == sorted(
+        tuple(r) for r in changes.collect())
